@@ -545,7 +545,9 @@ def ivf_cells_seeded(
             if cent_rows
             else np.zeros((0, 0), dtype=np.float64)
         )
-        top1 = topk_vs_ref_udf(c_ids, c_mat, k=1, exclude_self=False)
+        top1 = topk_vs_ref_udf(
+            c_ids, c_mat, k=1, sim_decimals=sim_decimals, exclude_self=False
+        )
         return e.select(
             "vec_id",
             F.element_at(top1("vec_id", "v"), 1)["neighbor_id"].alias("cell"),

@@ -67,8 +67,9 @@ def svg_line_chart(
 
     Mark spec: 2px line, 3px radius point markers with native <title>
     tooltips, recessive grid, direct labels on min/max only (selective,
-    never every point).
+    never every point). Points whose value is None are skipped.
     """
+    points = [(label, v) for label, v in points if v is not None]
     if not points:
         return f'<svg class="viz" role="img" aria-label="{html.escape(title)}"></svg>'
     pad, top, bottom = 40, 24, 20
@@ -106,7 +107,8 @@ def svg_bar_chart(
 ) -> str:
     """Single-series bar chart: 4px-rounded data ends anchored to the
     baseline (square bottoms via an overlap rect), 2px gaps, native
-    <title> tooltips."""
+    <title> tooltips. Points whose value is None are skipped."""
+    points = [(label, v) for label, v in points if v is not None]
     if not points:
         return f'<svg class="viz" role="img" aria-label="{html.escape(title)}"></svg>'
     pad, top, bottom = 40, 24, 20

@@ -23,6 +23,9 @@ scan→generate→project stage.
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -66,8 +69,26 @@ def read_raw_json(spark: SparkSession, path: str, fields: dict[str, str]) -> Dat
     :func:`normalize_hourly` turns them into null columns), matching the
     reference's "Missing fields will be left as empty values"
     (transform.py:121-125).
+
+    ``path`` is one document or a landed directory plus a file-name
+    pattern (``<raw>/*_weather_latest.json``). A pattern in the file
+    name alone is read as the directory with a ``pathGlobFilter``:
+    Spark globs a path into one root path per file, and past 32 root
+    paths (``parallelPartitionDiscovery.threshold``) it lists them with
+    a Spark job of one task per file, before the first scan. One
+    directory root is listed on the driver and runs no job; with no
+    matching file it reads as no rows. Any other path is passed
+    through unchanged.
+
+    Contract: a landed directory is flat. Files in a plain
+    subdirectory are not read; a partition-style ``k=v/`` subdirectory
+    makes the read fail with ``CONFLICTING_DIRECTORY_STRUCTURES``.
     """
-    return spark.read.schema(_raw_schema(fields)).option("multiLine", "true").json(path)
+    reader = spark.read.schema(_raw_schema(fields)).option("multiLine", "true")
+    directory, name = os.path.split(path)
+    if glob.has_magic(name) and not glob.has_magic(directory):
+        return reader.option("pathGlobFilter", name).json(directory or ".")
+    return reader.json(path)
 
 
 def _conformed(arr: Column, time_arr: Column) -> Column:
@@ -209,10 +230,12 @@ def land_raw(
 
     Scale: landing is a driver/edge job by design (one API call per
     city); the cluster's work starts at ``read_raw_json`` over the
-    landed directory, which parallelizes over documents.
+    landed directory, which parallelizes over documents. Every city
+    lands flat in ``raw_dir``, so a pass reads the directory with a
+    file-name filter: a glob over N cities would be N root paths, and
+    past 32 of them Spark lists them with an N-task job per read.
     """
     import json as _json
-    import os
     import time as _time
 
     if not 1 <= days <= 16:

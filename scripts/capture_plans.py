@@ -15,7 +15,13 @@ but queries whose construction pins a bounded reference set —
 collect_ref_vectors / the IVF centroid pins in operators/similarity —
 DO run their small driver-side collect jobs while the plan is built;
 their capture is therefore slower but still cheap (the collects are
-hard-capped at REF_PIN_MAX_ROWS).
+hard-capped at REF_PIN_MAX_ROWS). The eager-checkpoint dedup operators
+in operators/dedup (prefix_filter_candidates, containment_candidates,
+verify_candidates_jaccard, verify_candidates_containment,
+pruned_jaccard_pairs) are not cheap: each persists its input, counts
+it and eagerly checkpoints its result, so it runs corpus-sized jobs
+while the plan is built, and capturing those queries costs about as
+much as running them at the chosen SF.
 """
 
 from __future__ import annotations

@@ -8,6 +8,7 @@ import datetime as dt
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
 from etl_weather_spark.operators.pipeline import daily_from_hourly, merge_hourly
 from etl_weather_spark.sources.openmeteo import (
@@ -233,3 +234,40 @@ def test_cli_all_bare_output_filenames(tmp_path, capsys, monkeypatch):
     )
     assert rc == 0
     assert (tmp_path / "daily.csv").exists() and (tmp_path / "report.html").exists()
+
+
+def test_read_raw_json_reads_landed_dir_without_listing_job(spark, tmp_path):
+    """A pattern over more than 32 landed files builds its DataFrame
+    without a Spark listing job and reads exactly the latest documents.
+    Contract: a landed directory is flat — a plain subdirectory is
+    ignored, and a partition-style ``k=v/`` one fails the read."""
+    from pyspark.errors import PySparkException
+
+    raw = tmp_path / "raw"
+    cities = [f"City {i:02d}" for i in range(40)]  # above the 32-path threshold
+    for now in ("20250101T000000", "20250102T120000"):  # history + newer latest
+        for c in cities:
+            land_raw(c, str(raw), transport=fake_transport, geocoder=fake_geocoder, now=now)
+    stray = json.dumps({"city": "stray", "ingest_ts": "2025-01-03T00:00:00", "hourly": WEATHER_HOURLY})
+    (raw / "city-00_weather_latest.json.tmp.123").write_text(stray)
+    (raw / "_x_weather_latest.json").write_text(stray)
+    (raw / "nested").mkdir()
+    (raw / "nested" / "deep_weather_latest.json").write_text(stray)
+
+    pattern = str(raw / "*_weather_latest.json")
+    sc = spark.sparkContext
+    sc.setJobGroup("read-raw-json-listing", "read_raw_json over a landed dir")
+    try:
+        df = read_raw_json(spark, pattern, HOURLY_WEATHER_FIELDS)
+        assert list(sc.statusTracker().getJobIdsForGroup("read-raw-json-listing")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    rows = df.select("city", F.col("ingest_ts").cast("string").alias("ts")).collect()
+    assert sorted(r.city for r in rows) == cities
+    assert {r.ts for r in rows} == {"2025-01-02 12:00:00"}
+
+    (raw / "k=v").mkdir()
+    (raw / "k=v" / "part_weather_latest.json").write_text(stray)
+    with pytest.raises(PySparkException, match="CONFLICTING_DIRECTORY_STRUCTURES"):
+        read_raw_json(spark, pattern, HOURLY_WEATHER_FIELDS).collect()

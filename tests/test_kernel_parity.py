@@ -118,6 +118,37 @@ def test_topk_vs_ref_exclude_self_switch(spark):
         assert r.top == expect, (r.vec_id, r.top)
 
 
+@pytest.mark.parametrize("sim_decimals", [6, 4])
+def test_ivf_cells_kernel_equals_catalyst_at_sim_decimals(spark, monkeypatch, sim_decimals):
+    """ivf_cells_seeded's Arrow kernel path and its Catalyst fallback
+    (forced with a centroid cap of 0) assign the same cells at any
+    ``sim_decimals``. The vectors sit between two centroids 0.008 rad
+    apart, where 4-dp similarities tie (lowest centroid wins) and 6-dp
+    ones do not."""
+    import math
+
+    from etl_weather_spark.operators import similarity
+
+    # ids 0-4 are the K = ceil(sqrt(25)) centroids; 5-24 the queries
+    angles = [0.0, 0.008, 1.5, 3.0, 4.5] + [0.0004 * i for i in range(20)]
+    emb = spark.createDataFrame(
+        [(i, [math.cos(a), math.sin(a)]) for i, a in enumerate(angles)],
+        "vec_id long, embedding array<float>",
+    )
+
+    def cells():
+        out = similarity.ivf_cells_seeded(emb, cells_per_sqrt_n=1, sim_decimals=sim_decimals)
+        return {r.vec_id: r.cell for r in out.collect()}
+
+    kernel = cells()
+    monkeypatch.setattr(similarity, "IVF_KERNEL_MAX_CENTROIDS", 0)
+    catalyst = cells()
+    assert kernel == catalyst
+    # the two roundings really assign differently: ids 16-24 lie nearer
+    # centroid 1, but at 4 dp they tie with centroid 0
+    assert {kernel[i] for i in range(16, 25)} == ({0} if sim_decimals == 4 else {1})
+
+
 def test_simhash_votes_kernel_bit_identical_to_aggregate(spark):
     """Round-11 portable-SimHash votes kernel == the 64-sum aggregate
     form, bitwise, on adversarial texts: empty string, single token,

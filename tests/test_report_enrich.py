@@ -27,6 +27,29 @@ def test_svg_charts_contain_marks_and_tooltips():
     assert "svg" in svg_line_chart([], title="x")
 
 
+def test_svg_charts_skip_none_values():
+    """A city whose air documents lack pm2_5 has a None daily average on
+    every day; the charts drop those points instead of raising."""
+    empty = '<svg class="viz" role="img" aria-label="x"></svg>'
+    all_none = [("2024-01-01", None), ("2024-01-02", None)]
+    assert svg_line_chart(all_none, title="x") == empty
+    assert svg_bar_chart(all_none, title="x") == empty
+
+    some_none = [("2024-01-01", 10.0), ("2024-01-02", None), ("2024-01-03", 5.0)]
+    line = svg_line_chart(some_none, title="x")
+    assert line.count("<circle") == 2 and "2024-01-02" not in line
+    bars = svg_bar_chart(some_none, title="x")
+    assert bars.count("<title>") == 2 and "2024-01-02" not in bars
+
+    page = render_report(
+        title="no pm",
+        summary={"period_avg": None, "n_days": 2},
+        daily=[{"date": d, "vavg": None, "vsum": 1.0} for d, _ in all_none],
+        recommendation="ok",
+    )
+    assert page.count("<svg") == 2 and page.count("<tr><td>2024-01-0") == 2
+
+
 def test_render_report_escapes_and_embeds():
     html_text = render_report(
         title="<script>alert(1)</script>",
